@@ -247,14 +247,15 @@ def _noop_transport(url, body, headers):
 
 
 def bench_stream_fanout(spark, n: int = 50_000) -> float:
-    """Webhook fan-out delivery throughput (G2/S8): n messages through
-    deliver_stream with a no-op endpoint; returns wall seconds."""
+    """Webhook fan-out delivery throughput (G2/S8): n messages over 5
+    topics through deliver_multiplexed_stream, one config per topic, all
+    posting to one no-op endpoint; returns wall seconds."""
     import shutil
     import tempfile
     from datetime import datetime, timedelta
 
     from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
-    from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
+    from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_multiplexed_stream
 
     d = tempfile.mkdtemp(prefix="pbs-fanout-")
     src, ckpt = os.path.join(d, "src"), os.path.join(d, "ckpt")
@@ -274,8 +275,13 @@ def bench_stream_fanout(spark, n: int = 50_000) -> float:
     spark.createDataFrame(rows, MESSAGE_SCHEMA).repartition(8).write.parquet(src)
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(src)
     sink = WebhookSink("http://noop", transport=_noop_transport)
+    configs = spark.createDataFrame(
+        [(f"t{k}", f"persistent://t{k}/ns/topic", sink.url, []) for k in range(5)],
+        "sub_key string, topic_full_name string, url string, headers array<string>",
+    )
     t0c = time.perf_counter()
-    q = deliver_stream(stream, sink, ckpt, query_name="bench-fanout")
+    q = deliver_multiplexed_stream(stream, configs, ckpt, sink_factory=lambda cfg: sink,
+                                   query_name="bench-fanout")
     q.processAllAvailable()
     q.stop()
     dt = time.perf_counter() - t0c

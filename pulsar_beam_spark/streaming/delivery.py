@@ -14,23 +14,17 @@ Reference parity (src/broker/webhook.go:96-241):
   path: the response body is appended to the reply stream's table
   (toPulsar, webhook.go:131-151).
 
-Scale — two delivery shapes, picked by the reconciler (G9):
-
-1. **Per-subscription** (``deliver_stream``): one StreamingQuery per
-   (topic-config x webhook) pair, mirroring the reference's
-   one-goroutine-per-consumer shape (webhook.go:259). Best failure
-   isolation (a dead endpoint stalls only its own query/checkpoint) but
-   Spark comfortably sustains dozens of concurrent streaming queries,
-   not the hundreds of webhook configs the config store can hold.
-2. **Multiplexed** (``deliver_multiplexed_stream``): ONE query serves
-   many configs — the message stream joins (broadcast, stream-static)
-   the config snapshot on topic name, and each executor partition routes
-   rows to a per-``sub_key`` sink instance. Per-webhook ack/retry/reply
-   semantics are preserved row-by-row; the trade is failure isolation:
-   one endpoint exhausting its retries fails the shared micro-batch and
-   redelivers ALL configs' rows of that epoch (at-least-once; endpoints
-   must dedup on PulsarMessageId, which the reference also requires).
-   See SCALE.md "Multiplexed delivery".
+Scale — one delivery shape at every fleet size (G9):
+``deliver_multiplexed_stream`` runs ONE StreamingQuery for all configs —
+the message stream joins (broadcast, stream-static) the config snapshot
+on topic name, and each executor partition routes rows to a per-``sub_key``
+sink instance. Per-webhook ack/retry/reply semantics are preserved
+row-by-row; the trade is failure isolation: one endpoint exhausting its
+retries fails the shared micro-batch and redelivers ALL configs' rows of
+that epoch (at-least-once; endpoints must dedup on PulsarMessageId,
+which the reference also requires). The reconciler keeps exactly one
+such query over the whole desired set. See SCALE.md "Multiplexed
+delivery".
 
 Inside foreachBatch, rows post from executor partitions with one pooled
 HTTP connection per (partition x webhook) (≙ the reference's TTL'd
@@ -173,92 +167,6 @@ def _append_replies(
     out.write.mode("append").parquet(reply_table_dir)
 
 
-def deliver_stream(
-    stream: DataFrame,
-    sink: WebhookSink,
-    checkpoint_dir: str,
-    reply_table_dir: str | None = None,
-    query_name: str = "webhook-delivery",
-    reply_write_partitions: int | None = None,
-):
-    """Start the delivery query: at-least-once via foreachBatch + retry;
-    failed batches roll back to the checkpoint and redeliver.
-
-    ``reply_write_partitions`` compacts the reply append: delivery still
-    fans out at full map-stage width, then ONLY the reply tuples shuffle
-    down to this many writer tasks — one small parquet file per epoch per
-    writer instead of one per delivery partition (the small-files knob
-    for long-running chains).  None (default) keeps the map-stage layout:
-    zero extra shuffle, best when replies are large (chain mode, where
-    every webhook responds with a body).  Never use coalesce here — it
-    would propagate upstream and collapse the DELIVERY stage itself onto
-    the writer count.
-    """
-    def deliver_batches(pdfs):
-        # runs ON THE EXECUTOR: each partition posts its rows with one
-        # sink instance (≙ one pooled connection per partition, the
-        # reference's cached-producer pattern G13). A raised exception
-        # (retries exhausted) fails the task -> batch -> checkpoint
-        # rollback -> redelivery: at-least-once.
-        #
-        # Arrow-batched transfer (mapInPandas): rows reach Python as
-        # columnar batches, ~2x the throughput of the per-row pickle
-        # path (df.rdd) this replaced — the conversion cost, not the
-        # HTTP stub, dominated the fan-out benchmark.
-        import pandas as pd
-
-        for pdf in pdfs:
-            out = []
-            for rec in pdf.to_dict("records"):
-                acked, reply = sink.push(rec)
-                if acked and reply is not None:
-                    # src_key names the reply's provenance — (source
-                    # message x CONFIG) — so replays of the same epoch
-                    # mint the SAME reply id (_append_replies) while two
-                    # DIFFERENT configs' replies to one source message
-                    # never collide. The config identity here is the
-                    # sink URL: the reconciler keys per-sub queries by
-                    # (topic-key + url), so same-message-same-url IS the
-                    # same subscription. Round-11 delivery fuzz found
-                    # the bare-message_id form: two per-sub queries
-                    # sharing a reply table (the e2e wiring) at the same
-                    # epoch number minted one id for two different
-                    # endpoints' bodies, and downstream exact-dedup
-                    # dropped a real reply.
-                    out.append(
-                        (*reply, f"{rec.get('message_id')}|{sink.url}"))
-            yield pd.DataFrame(out, columns=["topic", "pulsar_url", "body", "src_key"])
-
-    def handle(df: DataFrame, epoch: int) -> None:
-        # Empty-epoch gate: isEmpty() on the SOURCE batch df is a cheap
-        # limit-1 probe of the already-materialized micro-batch — no side
-        # effects, because the delivery plan (mapInPandas) hasn't been
-        # applied yet. It must NEVER move after mapInPandas: probing the
-        # delivery plan would POST every row, and the write would then
-        # re-execute it — double delivery. With the gate, long-running
-        # trigger-interval streams stop accumulating zero-row reply part
-        # files on idle epochs.
-        if df.isEmpty():
-            return
-        # Delivery fans out across executors; the reply bodies NEVER
-        # round-trip the driver (VERDICT r05 item 2): the mapInPandas
-        # output is written straight to the reply table. In the
-        # reference's chain mode every webhook replies, so at 100x this
-        # is a full micro-batch of response bodies that would otherwise
-        # funnel through one process.
-        replies = df.mapInPandas(
-            deliver_batches, "topic string, pulsar_url string, body binary, src_key string"
-        )
-        _append_replies(replies, epoch, reply_table_dir, reply_write_partitions)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
-    )
-
-
 def deliver_multiplexed_stream(
     stream: DataFrame,
     configs: DataFrame,
@@ -275,20 +183,28 @@ def deliver_multiplexed_stream(
     ``reconciler.desired_deliveries``. Each micro-batch joins the message
     stream to the broadcast config snapshot on topic name (stream-static
     inner join: a message on a topic with no activated webhook is simply
-    not delivered, exactly like the per-subscription mode never starting
-    a query for it), producing one delivery row per (message x config).
+    not delivered), producing one delivery row per (message x config).
     Executor partitions route each row to a per-``sub_key`` sink built by
     ``sink_factory(config_dict) -> WebhookSink`` (default: a real HTTP
     ``WebhookSink(url, headers)``) — one pooled connection per
     (partition x webhook), the same G13 cache shape as the reference.
 
-    Ack/retry/reply semantics are IDENTICAL per row to ``deliver_stream``
-    (same WebhookSink.push). The trade (documented in SCALE.md) is
-    failure isolation: one endpoint exhausting retries fails the shared
-    micro-batch, and checkpoint rollback redelivers every config's rows
-    of that epoch — at-least-once, never lost, but a poison endpoint
-    head-of-line-blocks its cohort, so the reconciler only multiplexes
-    beyond ``multiplex_threshold`` configs.
+    Ack/retry/reply semantics are per row (WebhookSink.push). The trade
+    (documented in SCALE.md) is failure isolation: one endpoint
+    exhausting retries fails the shared micro-batch, and checkpoint
+    rollback redelivers every config's rows of that epoch — at-least-
+    once, never lost, but a poison endpoint head-of-line-blocks its
+    cohort until it recovers or is deactivated.
+
+    ``reply_write_partitions`` compacts the reply append: delivery still
+    fans out at full map-stage width, then ONLY the reply tuples shuffle
+    down to this many writer tasks — one small parquet file per epoch per
+    writer instead of one per delivery partition (the small-files knob
+    for long-running chains).  None (default) keeps the map-stage layout:
+    zero extra shuffle, best when replies are large (chain mode, where
+    every webhook responds with a body).  Never use coalesce here — it
+    would propagate upstream and collapse the DELIVERY stage itself onto
+    the writer count.
     """
     from pyspark.sql import functions as F
 
@@ -323,17 +239,25 @@ def deliver_multiplexed_stream(
                     # message replied through two configs is two distinct
                     # replies, but an epoch REPLAY of either mints the
                     # same id (_append_replies' deterministic reply ids).
-                    # The config identity is the URL — the same form the
-                    # per-subscription mode mints — so a redelivery
-                    # across a MODE FLIP (per-sub <-> mux, reconciler
-                    # hysteresis) also collides by id instead of leaving
-                    # undedupable cross-mode duplicates in a shared
-                    # reply table (round-11 delivery fuzz).
+                    # The config identity is the URL, so two queries
+                    # with independent checkpoints that share a reply
+                    # table (one query per source, or a redeployment onto
+                    # a fresh checkpoint) also collide by id instead of
+                    # leaving undedupable duplicates (round-11 delivery
+                    # fuzz).
                     out.append((*reply, f"{rec.get('message_id')}|{rec['url']}"))
             yield pd.DataFrame(out, columns=["topic", "pulsar_url", "body", "src_key"])
 
     def handle(df: DataFrame, epoch: int) -> None:
-        if df.isEmpty():  # see deliver_stream.handle: source-side, no side effects
+        # Empty-epoch gate: isEmpty() on the SOURCE batch df is a cheap
+        # limit-1 probe of the already-materialized micro-batch — no side
+        # effects, because the delivery plan (mapInPandas) hasn't been
+        # applied yet. It must NEVER move after mapInPandas: probing the
+        # delivery plan would POST every row, and the write would then
+        # re-execute it — double delivery. With the gate, long-running
+        # trigger-interval streams stop accumulating zero-row reply part
+        # files on idle epochs.
+        if df.isEmpty():
             return
         routed = df.join(route, df["topic"] == route["topic_full_name"], "inner")
         # Second gate on the ROUTED frame: a batch whose messages all miss

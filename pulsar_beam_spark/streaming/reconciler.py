@@ -4,14 +4,14 @@
 Reference parity (src/broker/webhook.go:243-273): every PbDbInterval the
 broker loads all TopicConfigs, starts a consumer for each Activated
 (topic x webhook) not yet running, and cancels running ones no longer
-desired. The Spark shape is a driver-side set-diff over
-``spark.streams.active`` — the diff itself is a plain anti-join on the
-subscription key sha1(topic_key)+url (webhook.go:252).
+desired. The Spark shape is ONE delivery query over the whole desired
+set, restarted when that set changes; the (started, stopped) report is
+a plain set-diff on the subscription key sha1(topic_key)+url
+(webhook.go:252).
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 from collections.abc import Callable
 
@@ -41,79 +41,52 @@ def desired_deliveries(snapshot: DataFrame) -> DataFrame:
     )
 
 
-_MUX_KEY = "__multiplexed__"
-
-
 class Reconciler:
-    """start_fn(delivery_row_dict, checkpoint_dir) -> StreamingQuery-like
-    with .stop(); the reconciler owns the running map keyed by sub_key.
+    """Keeps ONE delivery query serving the whole desired set.
 
-    When ``start_mux_fn`` is given and the desired config count exceeds
-    ``multiplex_threshold``, the reconciler collapses delivery onto ONE
-    multiplexed query (deliver_multiplexed_stream) instead of one query
-    per subscription: Spark sustains dozens of concurrent StreamingQuery
-    instances, not the hundreds of webhook configs the config store can
-    hold, so per-subscription is kept for small/medium fleets (better
-    failure isolation) and multiplexing engages beyond the threshold.
-    ``start_mux_fn(desired_rows: list[dict], checkpoint_dir) -> query``.
-    The mux query restarts when the desired SET changes (config
-    add/remove) — the checkpoint survives restarts, so the file-source
-    offsets resume; rows of the in-flight epoch may redeliver
-    (at-least-once, same contract as a crash).
+    ``start_fn(desired_rows: list[dict], checkpoint_dir) -> query`` starts
+    a StreamingQuery-like object (``.isActive``, ``.stop()``) over every
+    desired (topic x webhook) row — ``deliver_multiplexed_stream`` over a
+    config frame built from the rows. The reconciler restarts that query
+    whenever the desired ROWS change: a config added or removed, and also
+    an edit that keeps the URL (new headers, e.g. a different TopicFn
+    reply target), because the running query holds a frozen config
+    snapshot. It also restarts a query that has terminated. Every start
+    reuses the same checkpoint dir, so the file-source offsets resume
+    across restarts; rows of the in-flight epoch may redeliver
+    (at-least-once, the same contract as a crash).
 
-    MODE TRANSITIONS redeliver more than an epoch: per-subscription and
-    multiplexed queries keep SEPARATE checkpoints (per-sub_key vs one
-    shared), so the first flip INTO mux starts its file-source offsets
-    from scratch (the retained topic backlog redelivers to every config
-    once), and a flip back OUT resumes per-sub checkpoints frozen at the
-    flip-in point (the mux period redelivers per config). Both stay
-    inside the at-least-once contract (endpoints dedup on
-    PulsarMessageId — required by the reference's contract too), but a
-    flip is EXPENSIVE, so it must not flap: the mode flips up only above
-    ``multiplex_threshold`` and back down only at/below
-    ``demux_threshold`` (default threshold // 2) — a fleet oscillating
-    around the boundary stays in its current mode inside the
-    [demux_threshold, multiplex_threshold] band.
+    One query at every fleet size is the scale shape: a Spark driver
+    sustains dozens of concurrent streaming queries, not the hundreds of
+    webhook configs the config store can hold. The trade is failure
+    isolation — a poison endpoint fails the shared micro-batch and holds
+    back its cohort until it recovers or is deactivated (SCALE.md
+    "Multiplexed delivery").
     """
 
     def __init__(self, spark: SparkSession, checkpoint_root: str,
-                 start_fn: Callable[[dict, str], object],
-                 start_mux_fn: Callable[[list, str], object] | None = None,
-                 multiplex_threshold: int = 32,
-                 demux_threshold: int | None = None):
+                 start_fn: Callable[[list, str], object]):
         self.spark = spark
-        self.checkpoint_root = checkpoint_root
+        self.checkpoint_dir = os.path.join(checkpoint_root, "delivery")
         self.start_fn = start_fn
-        self.start_mux_fn = start_mux_fn
-        self.multiplex_threshold = multiplex_threshold
-        self.demux_threshold = (
-            multiplex_threshold // 2 if demux_threshold is None
-            else min(demux_threshold, multiplex_threshold)
-        )
-        self.running: dict[str, object] = {}
-        self.mux_covered: frozenset[str] = frozenset()
+        self.query: object = None
+        # sub_key -> desired row the running query serves
+        self.serving: dict[str, dict] = {}
         self._last_version: object = None  # None = no completed tick yet
 
-    def _checkpoint_for(self, sub_key: str) -> str:
-        # checkpoint dir per subscription key — resumable across restarts
-        # (G6 failover ≙ restart-from-checkpoint)
-        d = os.path.join(self.checkpoint_root, hashlib.sha1(sub_key.encode()).hexdigest())
-        os.makedirs(d, exist_ok=True)
-        return d
-
-    def _stop(self, key: str) -> None:
-        q = self.running.pop(key)
-        try:
-            q.stop()
-        except Exception:
-            pass
+    def _stop(self) -> None:
+        q, self.query, self.serving = self.query, None, {}
+        if q is not None:
+            try:
+                q.stop()
+            except Exception:
+                pass
 
     def reconcile(self, snapshot: DataFrame,
                   version: object | None = None,
                   force: bool = False) -> tuple[list[str], list[str]]:
-        """One tick: returns (started_sub_keys, stopped_sub_keys) — in
-        multiplexed mode these are the sub_keys whose coverage was added/
-        removed by the single query.
+        """One tick: returns (started_sub_keys, stopped_sub_keys) — the
+        sub_keys whose coverage the query gained or lost.
 
         ``version`` is the config changelog's max version — a cheap
         metadata read for the caller (``ConfigStore`` keeps the
@@ -141,51 +114,17 @@ class Reconciler:
         # skip the repair
         self._last_version = None
         desired = {r["sub_key"]: r.asDict() for r in desired_deliveries(snapshot).collect()}
-        in_mux = _MUX_KEY in self.running
-        # hysteresis: flip up above multiplex_threshold, back down only
-        # at/below demux_threshold — a transition redelivers (docstring),
-        # so counts oscillating inside the band keep the current mode
-        mux = (self.start_mux_fn is not None
-               and (len(desired) > self.multiplex_threshold
-                    or (in_mux and len(desired) > self.demux_threshold)))
-
-        if mux:
-            want = frozenset(desired)
-            # coverage BEFORE this tick is the union of what the mux query
-            # already serves and any per-subscription queries still running
-            # (the first flip INTO mux replaces them, it does not start
-            # coverage for their keys) — so the (started, stopped) report
-            # reflects actual coverage changes, not the mode transition
-            covered_before = self.mux_covered | frozenset(
-                k for k in self.running if k != _MUX_KEY)
-            started = [k for k in desired if k not in covered_before]
-            stopped = [k for k in covered_before if k not in desired]
-            # drain any per-subscription queries from a previous tick
-            for k in [k for k in self.running if k != _MUX_KEY]:
-                self._stop(k)
-            if want != self.mux_covered or _MUX_KEY not in self.running:
-                if _MUX_KEY in self.running:
-                    self._stop(_MUX_KEY)
-                self.running[_MUX_KEY] = self.start_mux_fn(
-                    list(desired.values()), self._checkpoint_for(_MUX_KEY)
-                )
-                self.mux_covered = want
-            self._last_version = version
-            return started, stopped
-
-        dropped_coverage: list[str] = []
-        if _MUX_KEY in self.running:  # fleet shrank back: demultiplex
-            # report the sub_keys whose coverage ENDS with the mux query
-            # (config removed entirely); keys still desired re-start
-            # below as per-sub queries and show up in to_start instead
-            dropped_coverage = [k for k in self.mux_covered if k not in desired]
-            self._stop(_MUX_KEY)
-            self.mux_covered = frozenset()
-        to_start = [k for k in desired if k not in self.running]
-        to_stop = [k for k in self.running if k not in desired]
-        for k in to_start:
-            self.running[k] = self.start_fn(desired[k], self._checkpoint_for(k))
-        for k in to_stop:
-            self._stop(k)
+        started = [k for k in desired if k not in self.serving]
+        stopped = [k for k in self.serving if k not in desired]
+        # restart on any row change, not just sub_key membership; and
+        # restart a terminated query (a batch that exhausted an
+        # endpoint's retries stops delivery for every config)
+        dead = self.query is not None and not self.query.isActive
+        if desired != self.serving or dead:
+            self._stop()
+            if desired:
+                os.makedirs(self.checkpoint_dir, exist_ok=True)
+                self.query = self.start_fn(list(desired.values()), self.checkpoint_dir)
+                self.serving = desired
         self._last_version = version
-        return to_start, to_stop + dropped_coverage
+        return started, stopped

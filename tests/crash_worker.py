@@ -106,7 +106,11 @@ def merge_after_flip(workdir: str) -> None:
 
 def deliver_mid_batch(workdir: str) -> None:
     from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
-    from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
+    from pulsar_beam_spark.streaming.delivery import (
+        WebhookSink,
+        deliver_multiplexed_stream,
+    )
+    from tests.conftest import topic_routes
 
     log = os.path.join(workdir, "delivered.txt")
     kill_marker = os.path.join(workdir, "KILLPOINT")
@@ -133,12 +137,14 @@ def deliver_mid_batch(workdir: str) -> None:
         return 200, {}, b""
 
     spark = _spark()
+    sink = WebhookSink("http://chaos-stub", transport=transport)
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(
         os.path.join(workdir, "msgs"))
-    q = deliver_stream(
+    q = deliver_multiplexed_stream(
         stream,
-        WebhookSink("http://chaos-stub", transport=transport),
+        topic_routes(spark, ["persistent://t/ns/a"], sink.url),
         os.path.join(workdir, "ckpt"),
+        sink_factory=lambda cfg: sink,
         query_name="chaos-delivery",
     )
     q.awaitTermination(180)
@@ -195,6 +201,7 @@ def reply_after_append(workdir: str) -> None:
     (downstream exact-dedup collapses them); the parent asserts that."""
     from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
     from pulsar_beam_spark.streaming import delivery
+    from tests.conftest import topic_routes
 
     real_append = delivery._append_replies
 
@@ -210,12 +217,14 @@ def reply_after_append(workdir: str) -> None:
                      "PulsarUrl": "pulsar://c:6650"}, b"pong:" + bytes(body)
 
     spark = _spark()
+    sink = delivery.WebhookSink("http://chaos-stub", transport=transport)
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(
         os.path.join(workdir, "msgs"))
-    q = delivery.deliver_stream(
+    q = delivery.deliver_multiplexed_stream(
         stream,
-        delivery.WebhookSink("http://chaos-stub", transport=transport),
+        topic_routes(spark, ["persistent://t/ns/a"], sink.url),
         os.path.join(workdir, "ckpt"),
+        sink_factory=lambda cfg: sink,
         reply_table_dir=os.path.join(workdir, "reply"),
         query_name="chaos-reply",
     )

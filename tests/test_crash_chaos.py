@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 
 from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
 
+from .conftest import topic_routes
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKER = os.path.join(REPO, "tests", "crash_worker.py")
 T0 = datetime(2024, 1, 1)
@@ -151,7 +153,10 @@ def test_merge_sink_sigkill_after_pointer_flip(spark, tmp_path):
 # == webhook fan-out =====================================================
 
 def test_delivery_sigkill_mid_batch_redelivers_epoch(spark, tmp_path):
-    from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
+    from pulsar_beam_spark.streaming.delivery import (
+        WebhookSink,
+        deliver_multiplexed_stream,
+    )
 
     workdir = str(tmp_path / "wd")
     os.makedirs(workdir)
@@ -177,11 +182,13 @@ def test_delivery_sigkill_mid_batch_redelivers_epoch(spark, tmp_path):
         os.close(fd)
         return 200, {}, b""
 
+    sink = WebhookSink("http://chaos-stub", transport=transport)
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(
         os.path.join(workdir, "msgs"))
-    q = deliver_stream(
-        stream, WebhookSink("http://chaos-stub", transport=transport),
-        os.path.join(workdir, "ckpt"), query_name="chaos-delivery-restart",
+    q = deliver_multiplexed_stream(
+        stream, topic_routes(spark, ["persistent://t/ns/a"], sink.url),
+        os.path.join(workdir, "ckpt"), sink_factory=lambda cfg: sink,
+        query_name="chaos-delivery-restart",
     )
     q.processAllAvailable()
     q.stop()
@@ -343,7 +350,10 @@ def test_reply_chain_replay_duplicates_collide_by_id(spark, tmp_path):
     message_id, so a downstream exact-dedup yields exactly one reply
     per source message — the chain table is exactly-once-able (the old
     uuid ids made replay duplicates indistinguishable from real ones)."""
-    from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
+    from pulsar_beam_spark.streaming.delivery import (
+        WebhookSink,
+        deliver_multiplexed_stream,
+    )
 
     workdir = str(tmp_path / "wd")
     os.makedirs(workdir)
@@ -365,11 +375,12 @@ def test_reply_chain_replay_duplicates_collide_by_id(spark, tmp_path):
         return 200, {"TopicFn": "persistent://t/ns/reply",
                      "PulsarUrl": "pulsar://c:6650"}, b"pong:" + bytes(body)
 
+    sink = WebhookSink("http://chaos-stub", transport=transport)
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(
         os.path.join(workdir, "msgs"))
-    q = deliver_stream(
-        stream, WebhookSink("http://chaos-stub", transport=transport),
-        os.path.join(workdir, "ckpt"),
+    q = deliver_multiplexed_stream(
+        stream, topic_routes(spark, ["persistent://t/ns/a"], sink.url),
+        os.path.join(workdir, "ckpt"), sink_factory=lambda cfg: sink,
         reply_table_dir=reply_dir, query_name="chaos-reply-restart",
     )
     q.processAllAvailable()

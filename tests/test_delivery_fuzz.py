@@ -15,10 +15,11 @@ the Spark goldens:
   replays the same epoch id and appends the same deterministic reply
   ids again (tests/test_crash_chaos.py::
   test_reply_chain_replay_duplicates_collide_by_id);
-- per-subscription and multiplexed queries hold independent
-  checkpoints, so hysteresis mode flips redeliver (SCALE.md) — the
-  machine may interleave ANY query at any step, a superset of the
-  reconciler's actual flip schedules.
+- queries with independent checkpoints may share one reply table
+  (one query per source, a redeployment onto a fresh checkpoint), and
+  each redelivers from its own offsets — the machine runs a
+  single-config query per endpoint beside one query over both, and may
+  interleave ANY of them at any step.
 
 The reply-id formula the model mints is anchored against the Spark
 plan's actual output by ``test_reply_id_formula_anchor`` below, so the
@@ -26,7 +27,7 @@ machine's exactly-once-able assertions are about the real contract,
 not a reimplementation.
 
 What it asserts, across machine-chosen interleavings of produce /
-per-sub epochs / mux epochs / endpoint flakiness flips / reply
+single-config epochs / two-config epochs / endpoint flakiness flips / reply
 toggles / crash-window injections:
 
 1. NEVER LOSS: after healing and draining, every activated config's
@@ -35,7 +36,7 @@ toggles / crash-window injections:
 2. EXACTLY-ONCE-ABLE replies: reply-id collisions always carry an
    identical body — i.e. a downstream exact-dedup on message_id keeps
    one copy of every DISTINCT logical reply and drops only true
-   duplicates. (Round-11 find: the per-sub src_key was the bare source
+   duplicates. (Round-11 find: the src_key was once the bare source
    message_id, so two configs sharing a reply table at the same epoch
    number minted ONE id for two different endpoints' replies and dedup
    dropped a real reply — fixed by scoping src_key with the config
@@ -218,15 +219,16 @@ def test_delivery_interleavings():
 
 def test_reply_id_formula_anchor(spark, tmp_path):
     """Pin mirror_reply_id to the REAL id the delivery plan mints
-    (_append_replies + deliver_stream's src_key): one message, one
+    (_append_replies + deliver_multiplexed_stream's src_key): one message, one
     replying endpoint, one epoch — the parquet row's message_id must
     equal the model's formula byte-for-byte. If the production formula
     changes, this fails before the fuzz machine can drift."""
     from datetime import datetime
 
+    from .conftest import topic_routes
     from .test_streaming import MESSAGE_SCHEMA  # the envelope schema
 
-    from pulsar_beam_spark.streaming.delivery import deliver_stream
+    from pulsar_beam_spark.streaming.delivery import deliver_multiplexed_stream
 
     t0 = datetime(2024, 1, 1)
     msgs_dir = str(tmp_path / "msgs")
@@ -240,9 +242,10 @@ def test_reply_id_formula_anchor(spark, tmp_path):
 
     reply_dir = str(tmp_path / "reply")
     sink = WebhookSink(URLS[0], transport=transport)
-    q = deliver_stream(
+    q = deliver_multiplexed_stream(
         spark.readStream.schema(MESSAGE_SCHEMA).parquet(msgs_dir),
-        sink, str(tmp_path / "ckpt"), reply_table_dir=reply_dir,
+        topic_routes(spark, [TOPIC_A], sink.url), str(tmp_path / "ckpt"),
+        sink_factory=lambda cfg: sink, reply_table_dir=reply_dir,
         query_name="reply-id-anchor",
     )
     q.processAllAvailable()

@@ -8,13 +8,13 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from pyspark.sql import functions as F
-
 from pulsar_beam_spark.model.config_store import ConfigStore
 from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
 from pulsar_beam_spark.model.topic import Webhook
-from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
+from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_multiplexed_stream
 from pulsar_beam_spark.streaming.reconciler import Reconciler
+
+from .conftest import routes
 
 T0 = datetime(2024, 1, 1)
 TOPIC_A = "persistent://ming/ns/topic-a"
@@ -78,24 +78,23 @@ def test_golden_flow(spark, tmp_path):
     ]
     spark.createDataFrame(msgs, MESSAGE_SCHEMA).coalesce(1).write.parquet(ingest_dir)
 
-    # 3. reconciler starts one delivery query per activated webhook
+    # 3. reconciler starts the delivery query over the activated webhooks
     endpoint = _ReplyingEndpoint(tmp_path / "endpoint-spool")
     reply_dir = str(tmp_path / "topic-b")
 
-    def start_fn(row, ckpt):
-        stream = (
-            spark.readStream.schema(MESSAGE_SCHEMA)
-            .parquet(ingest_dir)
-            .filter(F.col("topic") == row["topic_full_name"])
+    def start_fn(rows, ckpt):
+        stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(ingest_dir)
+        return deliver_multiplexed_stream(
+            stream, routes(spark, rows), ckpt,
+            sink_factory=lambda cfg: WebhookSink(cfg["url"], headers=cfg["headers"], transport=endpoint),
+            reply_table_dir=reply_dir, query_name="e2e-delivery",
         )
-        sink = WebhookSink(row["url"], headers=row["headers"] or [], transport=endpoint)
-        return deliver_stream(stream, sink, ckpt, reply_table_dir=reply_dir, query_name="e2e-delivery")
 
     rec = Reconciler(spark, str(tmp_path / "ckpts"), start_fn)
     started, _ = rec.reconcile(store.snapshot())
     assert len(started) == 1
 
-    q = rec.running[started[0]]
+    q = rec.query
     q.processAllAvailable()
 
     # 4. every message reached the endpoint...
@@ -110,4 +109,4 @@ def test_golden_flow(spark, tmp_path):
     # 5. cleanup: deactivating the config stops the query on next tick
     store.update(TOPIC_A, "pulsar://c:6650", [], tenant="ming")
     _, stopped = rec.reconcile(store.snapshot())
-    assert len(stopped) == 1 and not rec.running
+    assert len(stopped) == 1 and rec.query is None

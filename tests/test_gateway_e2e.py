@@ -26,7 +26,9 @@ from pulsar_beam_spark.icrypto import RSAKeyPair
 from pulsar_beam_spark.model.config_store import InMemoryConfigStore
 from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
 from pulsar_beam_spark.server import GatewayApp, TopicDirStore, make_server
-from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
+from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_multiplexed_stream
+
+from .conftest import routes, topic_routes
 
 try:
     from cryptography.hazmat.primitives import serialization
@@ -88,7 +90,9 @@ def test_reply_loop_through_live_gateway(spark, tmp_path):
             spark.readStream.schema(MESSAGE_SCHEMA)
             .parquet(app.message_store.topic_dir(TOPIC_A))
         )
-        q = deliver_stream(stream, sink, str(tmp_path / "ckpt"))
+        q = deliver_multiplexed_stream(
+            stream, topic_routes(spark, [TOPIC_A], sink.url), str(tmp_path / "ckpt"),
+            sink_factory=lambda cfg: sink)
         q.processAllAvailable()
         q.stop()
 
@@ -114,12 +118,10 @@ def test_http_config_driven_delivery_lifecycle(spark, tmp_path):
     """The reference's PRODUCTION control plane over real HTTP: a webhook
     config registered via POST /v2/topic makes the reconciler start a
     delivery query whose webhook target re-produces onto topic B through
-    the gateway; DELETE /v2/topic stops it on the next tick."""
-    from pyspark.sql import functions as SF
-
+    the gateway; re-POSTing the config with the same URL but a new
+    TopicFn header re-addresses the running delivery to topic C on the
+    next tick; DELETE /v2/topic stops it on the next tick."""
     from pulsar_beam_spark.model.config_store import snapshot_df
-    from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
-    from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
     from pulsar_beam_spark.streaming.reconciler import Reconciler
 
     app = GatewayApp(
@@ -136,71 +138,90 @@ def test_http_config_driven_delivery_lifecycle(spark, tmp_path):
     try:
         # 1. control plane: register topic A with a webhook whose target
         #    is the gateway's own firehose, re-addressed to topic B
-        cfg = json.dumps({
-            "TopicFullName": TOPIC_A,
-            "PulsarUrl": PULSAR_URL,
-            "Webhooks": [{
-                "URL": base + "/v1/firehose",
-                "Subscription": "lifecycle-sub",
-                "InitialPosition": "earliest",
-                "Headers": [f"TopicFn: {TOPIC_B}", f"PulsarUrl: {PULSAR_URL}"],
-            }],
-        }).encode()
-        req = urllib.request.Request(base + "/v2/topic", data=cfg, method="POST")
-        with urllib.request.urlopen(req, timeout=10) as resp:
-            assert resp.status == 201
-            key = json.loads(resp.read())["key"]
+        def post_config(reply_topic):
+            cfg = json.dumps({
+                "TopicFullName": TOPIC_A,
+                "PulsarUrl": PULSAR_URL,
+                "Webhooks": [{
+                    "URL": base + "/v1/firehose",
+                    "Subscription": "lifecycle-sub",
+                    "InitialPosition": "earliest",
+                    "Headers": [f"TopicFn: {reply_topic}", f"PulsarUrl: {PULSAR_URL}"],
+                }],
+            }).encode()
+            req = urllib.request.Request(base + "/v2/topic", data=cfg, method="POST")
+            with urllib.request.urlopen(req, timeout=10) as resp:
+                assert resp.status == 201
+                return json.loads(resp.read())["key"]
+
+        def produce(values):
+            for i in values:
+                r = urllib.request.Request(
+                    base + "/v1/firehose", data=f'{{"i": {i}}}'.encode(), method="POST",
+                    headers={"TopicFn": TOPIC_A, "PulsarUrl": PULSAR_URL})
+                assert urllib.request.urlopen(r, timeout=10).status == 200
+
+        def poll(topic):
+            req = urllib.request.Request(
+                base + "/v2/poll/persistent/tenant1/ns1/" + topic.rsplit("/", 1)[1])
+            with urllib.request.urlopen(req, timeout=10) as resp:
+                out = json.loads(resp.read())
+            return sorted(json.loads(m["payload"])["i"] for m in out["messages"])
+
+        key = post_config(TOPIC_B)
 
         # 2. data plane: three messages into topic A over HTTP
-        for i in range(3):
-            r = urllib.request.Request(
-                base + "/v1/firehose", data=f'{{"i": {i}}}'.encode(), method="POST",
-                headers={"TopicFn": TOPIC_A, "PulsarUrl": PULSAR_URL})
-            assert urllib.request.urlopen(r, timeout=10).status == 200
+        produce(range(3))
 
         # 3. reconciler tick: desired (HTTP-registered config) vs running
-        def start_fn(row, ckpt):
+        def start_fn(rows, ckpt):
+            topic, = {r["topic_full_name"] for r in rows}
             stream = (
                 spark.readStream.schema(MESSAGE_SCHEMA)
-                .parquet(app.message_store.topic_dir(row["topic_full_name"]))
-                .filter(SF.col("topic") == row["topic_full_name"])
+                .parquet(app.message_store.topic_dir(topic))
             )
-            sink = WebhookSink(row["url"], headers=row["headers"] or [])
-            return deliver_stream(stream, sink, ckpt, query_name="lifecycle-delivery")
+            return deliver_multiplexed_stream(
+                stream, routes(spark, rows), ckpt, query_name="lifecycle-delivery")
 
         rec = Reconciler(spark, str(tmp_path / "ckpts"), start_fn)
         started, _ = rec.reconcile(snapshot_df(spark, app.config_store))
         assert len(started) == 1
-        rec.running[started[0]].processAllAvailable()
+        rec.query.processAllAvailable()
 
         # 4. the deliveries re-produced onto topic B; read them back over HTTP
-        req = urllib.request.Request(base + "/v2/poll/persistent/tenant1/ns1/egress")
-        with urllib.request.urlopen(req, timeout=10) as resp:
-            out = json.loads(resp.read())
-        assert out["size"] == 3
-        assert sorted(json.loads(m["payload"])["i"] for m in out["messages"]) == [0, 1, 2]
+        assert poll(TOPIC_B) == [0, 1, 2]
 
-        # 5. DELETE the config -> next tick stops the query
+        # 5. re-POST with the same URL and a new TopicFn: the next tick
+        #    restarts the delivery with the new headers, resuming from the
+        #    checkpoint, so only new messages flow, now onto topic C
+        topic_c = "persistent://tenant1/ns1/egress-c"
+        assert post_config(topic_c) == key
+        first = rec.query
+        assert rec.reconcile(snapshot_df(spark, app.config_store)) == ([], [])
+        assert rec.query is not first and not first.isActive
+        produce(range(3, 5))
+        rec.query.processAllAvailable()
+        assert poll(topic_c) == [3, 4]
+        assert len(app.message_store.scan(TOPIC_B)[0]) == 3
+
+        # 6. DELETE the config -> next tick stops the query
         req = urllib.request.Request(base + f"/v2/topic/{key}", method="DELETE")
         assert urllib.request.urlopen(req, timeout=10).status == 200
         _, stopped = rec.reconcile(snapshot_df(spark, app.config_store))
-        assert len(stopped) == 1 and not rec.running
+        assert len(stopped) == 1 and rec.query is None
     finally:
         httpd.shutdown()
 
 
 def test_multiplexed_delivery_through_live_gateway(spark, tmp_path):
-    """The multiplexed mode over real sockets, zero mocks: FOUR webhook
-    configs on one ingress topic, served by ONE StreamingQuery (the
-    reconciler's start_mux_fn path past the threshold), each config's
-    target the live gateway's own firehose re-addressed to a DIFFERENT
-    egress topic; every egress topic then polls back all messages over
-    HTTP. DELETE demultiplexes on the next tick."""
-    from pyspark.sql import functions as SF
-
+    """Multiplexed delivery over real sockets, zero mocks: FOUR webhook
+    configs on one ingress topic, served by the reconciler's ONE
+    StreamingQuery, each config's target the live gateway's own firehose
+    re-addressed to a DIFFERENT egress topic; every egress topic then
+    polls back all messages over HTTP. DELETE stops the query on the
+    next tick."""
     from pulsar_beam_spark.model.config_store import snapshot_df
-    from pulsar_beam_spark.streaming.delivery import deliver_multiplexed_stream
-    from pulsar_beam_spark.streaming.reconciler import _MUX_KEY, Reconciler
+    from pulsar_beam_spark.streaming.reconciler import Reconciler
 
     app = GatewayApp(
         config_store=InMemoryConfigStore(),
@@ -242,29 +263,23 @@ def test_multiplexed_delivery_through_live_gateway(spark, tmp_path):
                 headers={"TopicFn": TOPIC_A, "PulsarUrl": PULSAR_URL})
             assert urllib.request.urlopen(r, timeout=10).status == 200
 
-        # 3. reconciler tick: 4 desired > threshold 2 -> ONE mux query
-        #    with REAL HTTP sinks (default sink_factory)
-        def start_mux_fn(rows, ckpt):
-            configs = spark.createDataFrame(
-                [(r["sub_key"], r["topic_full_name"], r["url"],
-                  list(r["headers"] or [])) for r in rows],
-                "sub_key string, topic_full_name string, url string, headers array<string>",
-            )
+        # 3. reconciler tick: 4 desired configs -> ONE query with REAL
+        #    HTTP sinks (default sink_factory)
+        starts = []
+
+        def start_fn(rows, ckpt):
+            starts.append(len(rows))
             stream = (
                 spark.readStream.schema(MESSAGE_SCHEMA)
                 .parquet(app.message_store.topic_dir(TOPIC_A))
             )
             return deliver_multiplexed_stream(
-                stream, configs, ckpt, query_name="mux-e2e")
+                stream, routes(spark, rows), ckpt, query_name="mux-e2e")
 
-        def start_fn(row, ckpt):  # must not be used past the threshold
-            raise AssertionError("per-sub start_fn called in mux regime")
-
-        rec = Reconciler(spark, str(tmp_path / "mux-ckpts"), start_fn,
-                         start_mux_fn=start_mux_fn, multiplex_threshold=2)
+        rec = Reconciler(spark, str(tmp_path / "mux-ckpts"), start_fn)
         started, _ = rec.reconcile(snapshot_df(spark, app.config_store))
-        assert len(started) == 4 and list(rec.running) == [_MUX_KEY]
-        rec.running[_MUX_KEY].processAllAvailable()
+        assert len(started) == 4 and starts == [4]
+        rec.query.processAllAvailable()
 
         # 4. every egress topic took all three messages; poll over HTTP
         for t in egress:
@@ -280,6 +295,6 @@ def test_multiplexed_delivery_through_live_gateway(spark, tmp_path):
         req = urllib.request.Request(base + f"/v2/topic/{key}", method="DELETE")
         assert urllib.request.urlopen(req, timeout=10).status == 200
         _, stopped = rec.reconcile(snapshot_df(spark, app.config_store))
-        assert len(stopped) == 4 and not rec.running
+        assert len(stopped) == 4 and rec.query is None
     finally:
         httpd.shutdown()

@@ -23,6 +23,8 @@ from datetime import datetime
 from pulsar_beam_spark.model.message import TOPIC_CONFIG_SCHEMA
 from pulsar_beam_spark.streaming.reconciler import Reconciler
 
+from .conftest import FakeQuery
+
 N_CONFIGS = 10_000
 TICK_BOUND_S = 30.0
 T0 = datetime(2024, 1, 1)
@@ -42,40 +44,29 @@ def _snapshot(spark, n, drop_prefix: int = 0):
     return spark.createDataFrame(rows, TOPIC_CONFIG_SCHEMA)
 
 
-class _FakeQuery:
-    def stop(self):
-        pass
+def test_reconciler_tick_latency_at_10k_configs(spark, tmp_path):
+    started = []
 
+    def start_fn(rows, ckpt):
+        started.append(len(rows))
+        return FakeQuery()
 
-def test_reconciler_tick_latency_at_10k_configs(spark):
-    started_mux = []
-
-    def start_fn(row, ckpt):
-        return _FakeQuery()
-
-    def start_mux_fn(rows, ckpt):
-        started_mux.append(len(rows))
-        return _FakeQuery()
-
-    rec = Reconciler(
-        spark, "/tmp/pbs-reconciler-scale-ckpts", start_fn,
-        start_mux_fn=start_mux_fn, multiplex_threshold=32,
-    )
+    rec = Reconciler(spark, str(tmp_path / "ckpts"), start_fn)
 
     snap = _snapshot(spark, N_CONFIGS).localCheckpoint()
 
     t0 = time.perf_counter()
     s1, t1 = rec.reconcile(snap)
-    flip_tick = time.perf_counter() - t0
+    first_tick = time.perf_counter() - t0
     assert len(s1) == N_CONFIGS and not t1
-    assert started_mux == [N_CONFIGS], "one mux query serves the fleet"
+    assert started == [N_CONFIGS], "one query serves the fleet"
 
-    # steady state: the tick is a collect + set compare, no restarts
+    # steady state: the tick is a collect + row compare, no restarts
     t0 = time.perf_counter()
     s2, t2 = rec.reconcile(snap)
     steady_tick = time.perf_counter() - t0
     assert not s2 and not t2
-    assert started_mux == [N_CONFIGS], "steady tick must not restart the mux query"
+    assert started == [N_CONFIGS], "steady tick must not restart the query"
     assert steady_tick < TICK_BOUND_S, (
         f"steady-state tick took {steady_tick:.1f}s at {N_CONFIGS} configs "
         "— a linear tick on this host is seconds; investigate for a "
@@ -88,31 +79,31 @@ def test_reconciler_tick_latency_at_10k_configs(spark):
     s3, t3 = rec.reconcile(snap2)
     delta_tick = time.perf_counter() - t0
     assert not s3 and len(t3) == 10
-    assert started_mux == [N_CONFIGS, N_CONFIGS - 10], "set change restarts mux once"
+    assert started == [N_CONFIGS, N_CONFIGS - 10], "set change restarts the query once"
     assert delta_tick < TICK_BOUND_S
 
     print(
-        f"\nreconciler@{N_CONFIGS}: flip={flip_tick:.2f}s "
+        f"\nreconciler@{N_CONFIGS}: first={first_tick:.2f}s "
         f"steady={steady_tick:.2f}s delta={delta_tick:.2f}s"
     )
 
 
-def test_version_gated_tick_skips_collect(spark):
+def test_version_gated_tick_skips_collect(spark, tmp_path):
     """VERDICT r09 item 4: with the changelog version supplied and
     unchanged, the steady tick must be a pure in-memory no-op — no
     Spark job, no desired-set collect — so tick cost is O(1) at any
     fleet size. A version bump (or version=None) forces the full diff."""
     calls = []
 
-    def start_fn(row, ckpt):
-        calls.append(row["sub_key"])
-        return _FakeQuery()
+    def start_fn(rows, ckpt):
+        calls.append(len(rows))
+        return FakeQuery()
 
-    rec = Reconciler(spark, "/tmp/pbs-reconciler-vgate-ckpts", start_fn)
+    rec = Reconciler(spark, str(tmp_path / "ckpts"), start_fn)
     snap = _snapshot(spark, 5).localCheckpoint()
 
     s1, _ = rec.reconcile(snap, version=7)
-    assert len(s1) == 5
+    assert len(s1) == 5 and calls == [5]
 
     # unchanged version: no-op without touching Spark — poison the
     # snapshot reference to PROVE the fast path never evaluates it
@@ -145,10 +136,10 @@ def test_version_gated_tick_skips_collect(spark):
 
     # an exception mid-tick invalidates the gate: the NEXT gated tick
     # must rerun the repair rather than skip it
-    def boom(row, ckpt):
+    def boom(rows, ckpt):
         raise RuntimeError("start failed")
 
-    rec2 = Reconciler(spark, "/tmp/pbs-reconciler-vgate2-ckpts", boom)
+    rec2 = Reconciler(spark, str(tmp_path / "ckpts2"), boom)
     try:
         rec2.reconcile(snap, version=3)
     except RuntimeError:
@@ -167,24 +158,18 @@ import pytest
     os.environ.get("PBS_RECONCILER_100K") != "1",
     reason="~1 min 100k-config control-plane measurement; set PBS_RECONCILER_100K=1",
 )
-def test_reconciler_tick_latency_at_100k_configs(spark):
+def test_reconciler_tick_latency_at_100k_configs(spark, tmp_path):
     """The 100k-fleet bound (VERDICT r09 item 4): the full-collect tick
     must stay linear and inside TICK_BOUND_S one decade above the 10k
     measurement, and the version-gated steady tick must stay O(1)."""
     n = 100_000
 
-    def start_mux_fn(rows, ckpt):
-        return _FakeQuery()
-
-    rec = Reconciler(
-        spark, "/tmp/pbs-reconciler-100k-ckpts", lambda r, c: _FakeQuery(),
-        start_mux_fn=start_mux_fn, multiplex_threshold=32,
-    )
+    rec = Reconciler(spark, str(tmp_path / "ckpts"), lambda rows, ckpt: FakeQuery())
     snap = _snapshot(spark, n).localCheckpoint()
 
     t0 = time.perf_counter()
     s1, _ = rec.reconcile(snap, version=1)
-    flip = time.perf_counter() - t0
+    first = time.perf_counter() - t0
     assert len(s1) == n
 
     t0 = time.perf_counter()
@@ -196,4 +181,4 @@ def test_reconciler_tick_latency_at_100k_configs(spark):
     assert rec.reconcile(snap, version=None) == ([], [])
     full = time.perf_counter() - t0
     assert full < TICK_BOUND_S, f"full 100k tick took {full:.1f}s"
-    print(f"\nreconciler@{n}: flip={flip:.2f}s full={full:.2f}s gated={gated*1e6:.0f}us")
+    print(f"\nreconciler@{n}: first={first:.2f}s full={full:.2f}s gated={gated*1e6:.0f}us")

@@ -17,11 +17,13 @@ from pyspark.sql import functions as F
 
 from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
 from pulsar_beam_spark.model.topic import Webhook
-from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
+from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_multiplexed_stream
 from pulsar_beam_spark.streaming.ingest import envelope_with_headers
 from pulsar_beam_spark.streaming.poll import bounded_poll
 from pulsar_beam_spark.streaming.sse import gen_subscription_name, sse_frame
 from pulsar_beam_spark.streaming.windows import dedup_stream, tumbling_counts
+
+from .conftest import FakeQuery, routes, topic_routes
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 
@@ -42,6 +44,11 @@ def _messages(n=40, dup_every=10):
             )
         )
     return rows
+
+
+# every topic the msg_dir stream carries: one config per topic routes
+# every row to a single endpoint
+TOPICS = sorted({r[1] for r in _messages()})
 
 
 @pytest.fixture()
@@ -551,13 +558,14 @@ def test_delivery_stream_end_to_end_with_reply(spark, msg_dir, tmp_path):
     sink = WebhookSink("http://stub", transport=t)
     reply_dir = str(tmp_path / "reply-table")
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(msg_dir)
-    q = deliver_stream(
-        stream.filter(F.col("topic") == "persistent://tenant0/ns/topic0"),
-        sink,
+    q = deliver_multiplexed_stream(
+        stream,
+        topic_routes(spark, ["persistent://tenant0/ns/topic0"], sink.url),
         str(tmp_path / "ckpt-deliver"),
+        sink_factory=lambda cfg: sink,
         reply_table_dir=reply_dir,
     )
-    # availableNow not set on deliver_stream: drive it until idle
+    # availableNow not set on the delivery query: drive it until idle
     q.processAllAvailable()
     q.stop()
     assert len(t.calls) > 0
@@ -580,7 +588,8 @@ def test_delivery_redelivers_after_failure(spark, msg_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt-redeliver")
     bad = WebhookSink("http://stub", transport=_Transport([(503, {}, b"")]), retry_max=0)
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(msg_dir)
-    q = deliver_stream(stream, bad, ckpt, query_name="redeliver-a")
+    q = deliver_multiplexed_stream(stream, topic_routes(spark, TOPICS, bad.url), ckpt,
+                                   sink_factory=lambda cfg: bad, query_name="redeliver-a")
     with pytest.raises(Exception):
         q.processAllAvailable()
         raise RuntimeError("expected stream failure")
@@ -588,7 +597,9 @@ def test_delivery_redelivers_after_failure(spark, msg_dir, tmp_path):
 
     good = _Transport([(200, {}, b"")], spool=tmp_path / "spool-good")
     stream2 = spark.readStream.schema(MESSAGE_SCHEMA).parquet(msg_dir)
-    q2 = deliver_stream(stream2, WebhookSink("http://stub", transport=good), ckpt, query_name="redeliver-b")
+    good_sink = WebhookSink("http://stub", transport=good)
+    q2 = deliver_multiplexed_stream(stream2, topic_routes(spark, TOPICS, good_sink.url), ckpt,
+                                    sink_factory=lambda cfg: good_sink, query_name="redeliver-b")
     q2.processAllAvailable()
     q2.stop()
     delivered = {h["PulsarMessageId"] for _, _, h in good.calls}
@@ -607,42 +618,34 @@ def test_reconciler_start_stop(spark, tmp_path):
         [Webhook("http://h1.example.com/cb", "subs-a"), Webhook("http://h2.example.com/cb", "subs-b")],
     )
 
-    class FakeQuery:
-        def __init__(self):
-            self.stopped = False
-
-        def stop(self):
-            self.stopped = True
-
     started = []
 
-    def start_fn(row, ckpt):
-        started.append(row["url"])
-        return FakeQuery()
+    def start_fn(rows, ckpt):
+        started.append(sorted(r["url"] for r in rows))
+        return FakeQuery(rows, ckpt)
 
     rec = Reconciler(spark, str(tmp_path / "ckpts"), start_fn)
     s, t = rec.reconcile(store.snapshot())
-    assert len(s) == 2 and not t and sorted(started) == ["http://h1.example.com/cb", "http://h2.example.com/cb"]
+    assert len(s) == 2 and not t and started == [["http://h1.example.com/cb", "http://h2.example.com/cb"]]
 
     # steady state: nothing new
     s, t = rec.reconcile(store.snapshot())
-    assert not s and not t
+    assert not s and not t and len(started) == 1
 
-    # drop one webhook -> its query stops
+    # drop one webhook -> its coverage stops
     store.update("persistent://t1/ns/a", "pulsar://c:6650", [Webhook("http://h1.example.com/cb", "subs-a")])
-    queries = dict(rec.running)
+    old = rec.query
     s, t = rec.reconcile(store.snapshot())
     assert not s and len(t) == 1
-    assert queries[t[0]].stopped
+    assert old.stopped and started[-1] == ["http://h1.example.com/cb"]
 
 
 def test_multiplexed_delivery_parity_24_configs(spark, msg_dir, tmp_path):
     """VERDICT r06 #3 golden: ONE StreamingQuery serves 24 webhook configs
     (6 topics x 4 webhooks) with per-config delivery/ack/reply parity to
-    the per-subscription mode — every (message row x matching config)
+    a single-config query — every (message row x matching config)
     delivered exactly once, every 2xx TopicFn reply appended."""
     from pulsar_beam_spark.model.config_store import ConfigStore
-    from pulsar_beam_spark.streaming.delivery import deliver_multiplexed_stream
     from pulsar_beam_spark.streaming.reconciler import desired_deliveries
 
     topics = [f"persistent://tenant{i}/ns/topic{j}" for i in range(2) for j in range(3)]
@@ -681,7 +684,7 @@ def test_multiplexed_delivery_parity_24_configs(spark, msg_dir, tmp_path):
     got = [(u, h["PulsarBeamId"]) for u, _, h in transport.calls]
     assert set(got) == expected and len(got) == len(expected) == len(msgs) * 4
 
-    # ack/header parity with the per-subscription path: same enrichment
+    # header enrichment reaches every config's endpoint
     sample_url, _, sample_hdrs = transport.calls[0]
     assert "PulsarMessageId" in sample_hdrs and "PulsarTopic" in sample_hdrs
     # reply parity: one reply per delivery, appended to the chain table
@@ -689,15 +692,15 @@ def test_multiplexed_delivery_parity_24_configs(spark, msg_dir, tmp_path):
     assert len(replies) == len(expected)
     assert all(r["topic"] == "persistent://t/ns/reply" for r in replies)
 
-    # per-subscription mode on one of the 24 configs delivers exactly the
-    # rows the mux query delivered for that config (parity cross-check)
+    # a query serving ONE of the 24 configs delivers exactly the rows the
+    # 24-config query delivered for that config (parity cross-check)
     one = configs.filter(F.col("url") == urls[topics[0]][0]).head().asDict()
     solo = _Transport([(200, {}, b"")], spool=tmp_path / "spool-solo")
-    q2 = deliver_stream(
-        spark.readStream.schema(MESSAGE_SCHEMA).parquet(msg_dir)
-        .filter(F.col("topic") == one["topic_full_name"]),
-        WebhookSink(one["url"], headers=one["headers"], transport=solo),
-        str(tmp_path / "ckpt-solo"), query_name="solo-parity",
+    q2 = deliver_multiplexed_stream(
+        spark.readStream.schema(MESSAGE_SCHEMA).parquet(msg_dir),
+        routes(spark, [one]), str(tmp_path / "ckpt-solo"),
+        sink_factory=lambda cfg: WebhookSink(cfg["url"], headers=cfg["headers"], transport=solo),
+        query_name="solo-parity",
     )
     q2.processAllAvailable()
     q2.stop()
@@ -712,7 +715,6 @@ def test_multiplexed_delivery_shared_fate_redelivery(spark, msg_dir, tmp_path):
     same checkpoint redelivers and every config converges (at-least-once,
     nothing lost)."""
     from pulsar_beam_spark.model.config_store import ConfigStore
-    from pulsar_beam_spark.streaming.delivery import deliver_multiplexed_stream
     from pulsar_beam_spark.streaming.reconciler import desired_deliveries
 
     topic = "persistent://tenant0/ns/topic0"
@@ -765,243 +767,114 @@ def test_multiplexed_delivery_shared_fate_redelivery(spark, msg_dir, tmp_path):
     assert got == expected and expected
 
 
-def test_reconciler_multiplex_threshold(spark, tmp_path):
-    """Reconciler collapses onto one multiplexed query past the threshold
-    and demultiplexes when the fleet shrinks back."""
+def test_reconciler_runs_one_query_with_one_checkpoint(spark, tmp_path):
+    """The reconciler runs ONE delivery query over the whole desired set at
+    every fleet size: a steady tick never restarts it; a membership change
+    restarts it on the SAME checkpoint dir (file-source offsets resume,
+    no backlog replay) and reports only the added/removed sub_keys; a
+    terminated query is restarted; an empty desired set stops it and
+    reports every key stopped."""
     from pulsar_beam_spark.model.config_store import ConfigStore
-    from pulsar_beam_spark.streaming.reconciler import _MUX_KEY, Reconciler
+    from pulsar_beam_spark.streaming.reconciler import Reconciler
 
-    store = ConfigStore(spark, str(tmp_path / "cfg-thresh"))
+    store = ConfigStore(spark, str(tmp_path / "cfg-one"))
+    queries = []
 
-    class FakeQuery:
-        def __init__(self):
-            self.stopped = False
+    def start_fn(rows, ckpt):
+        queries.append(FakeQuery(rows, ckpt))
+        return queries[-1]
 
-        def stop(self):
-            self.stopped = True
-
-    per_sub_started, mux_started = [], []
-
-    def start_fn(row, ckpt):
-        per_sub_started.append(row["url"])
-        return FakeQuery()
-
-    def start_mux_fn(rows, ckpt):
-        mux_started.append(sorted(r["url"] for r in rows))
-        return FakeQuery()
-
-    rec = Reconciler(spark, str(tmp_path / "ckpts-thresh"), start_fn,
-                     start_mux_fn=start_mux_fn, multiplex_threshold=3,
-                     demux_threshold=2)
-
-    def set_hooks(n):
-        store.update("persistent://t/ns/a", "pulsar://c:6650",
-                     [Webhook(f"http://h{i}.example.com/cb", f"s{i}") for i in range(n)])
-
-    set_hooks(2)  # under threshold: per-subscription mode
-    s, t = rec.reconcile(store.snapshot())
-    assert len(s) == 2 and not mux_started and len(rec.running) == 2
-
-    set_hooks(5)  # over threshold: ONE mux query, per-sub queries drained
-    per_sub = dict(rec.running)
-    covered_before = set(per_sub)
-    s, t = rec.reconcile(store.snapshot())
-    assert len(mux_started) == 1 and len(mux_started[0]) == 5
-    assert list(rec.running) == [_MUX_KEY]
-    assert all(q.stopped for k, q in per_sub.items() if k != _MUX_KEY)
-    # the 2 keys already running per-sub keep coverage across the flip:
-    # only the 3 genuinely new keys are reported started (ADVICE r07)
-    assert len(s) == 3 and not set(s) & covered_before and not t
-
-    # steady state: same desired set -> mux query NOT restarted
-    s, t = rec.reconcile(store.snapshot())
-    assert not s and not t and len(mux_started) == 1
-
-    set_hooks(4)  # membership change -> mux restarts with the new set
-    old_mux = rec.running[_MUX_KEY]
-    s, t = rec.reconcile(store.snapshot())
-    assert len(mux_started) == 2 and len(mux_started[1]) == 4
-    assert old_mux.stopped and len(t) == 1 and not s
-
-    set_hooks(3)  # inside the [demux, mux] hysteresis band: STAYS mux
-    s, t = rec.reconcile(store.snapshot())
-    assert _MUX_KEY in rec.running and len(rec.running) == 1
-    assert len(mux_started) == 3  # membership changed -> mux restarted, mode kept
-
-    set_hooks(2)  # at demux_threshold: demultiplex to per-sub queries
-    mux_q = rec.running[_MUX_KEY]
-    s, t = rec.reconcile(store.snapshot())
-    assert mux_q.stopped and _MUX_KEY not in rec.running
-    assert len(rec.running) == 2 and len(s) == 2
-
-
-def test_reconciler_mux_flip_reports_dropped_per_sub_keys(spark, tmp_path):
-    """A per-sub key that stops being desired on the SAME tick that flips
-    into mux mode must be reported stopped (ADVICE r07: it used to vanish
-    from the report — drained by the transition but never surfaced)."""
-    from pulsar_beam_spark.model.config_store import ConfigStore
-    from pulsar_beam_spark.streaming.reconciler import _MUX_KEY, Reconciler
-
-    store = ConfigStore(spark, str(tmp_path / "cfg-flipdrop"))
-
-    class FakeQuery:
-        def stop(self):
-            pass
-
-    rec = Reconciler(spark, str(tmp_path / "ckpts-flipdrop"),
-                     lambda row, ckpt: FakeQuery(),
-                     start_mux_fn=lambda rows, ckpt: FakeQuery(),
-                     multiplex_threshold=3, demux_threshold=2)
+    rec = Reconciler(spark, str(tmp_path / "ckpts-one"), start_fn)
 
     def set_hooks(lo, hi):
         store.update("persistent://t/ns/a", "pulsar://c:6650",
-                     [Webhook(f"http://h{i}.example.com/cb", f"s{i}")
-                      for i in range(lo, hi)])
+                     [Webhook(f"http://h{i}.example.com/cb", f"s{i}") for i in range(lo, hi)])
 
-    set_hooks(0, 2)  # per-sub mode: h0, h1
+    def urls(q):
+        return sorted(r["url"] for r in q.rows)
+
+    def key_of(keys, i):
+        k, = [k for k in keys if f"//h{i}." in k]
+        return k
+
+    set_hooks(0, 2)
     s, t = rec.reconcile(store.snapshot())
-    assert len(s) == 2 and not t
-    h0_key, = [k for k in rec.running if "h0" in k]
+    assert len(queries) == 1 and rec.query is queries[0]
+    assert urls(queries[0]) == ["http://h0.example.com/cb", "http://h1.example.com/cb"]
+    assert sorted(s) == sorted(r["sub_key"] for r in queries[0].rows) and not t
+    ckpt = queries[0].checkpoint_dir
+    assert os.path.isdir(ckpt)
+    h0_key = key_of(s, 0)
 
-    set_hooks(1, 6)  # flip into mux; h0 dropped, h1 carries over, h2-h5 new
+    # steady state: same desired set -> the query is NOT restarted
+    assert rec.reconcile(store.snapshot()) == ([], [])
+    assert len(queries) == 1 and not queries[0].stopped
+
+    # h0 removed and h2 added on one tick: restart on the same checkpoint
+    set_hooks(1, 3)
     s, t = rec.reconcile(store.snapshot())
-    assert list(rec.running) == [_MUX_KEY]
-    assert len(s) == 4 and all("h1" not in k for k in s)
-    assert t == [h0_key]
+    assert len(queries) == 2 and queries[0].stopped and rec.query is queries[1]
+    assert queries[1].checkpoint_dir == ckpt
+    assert urls(queries[1]) == ["http://h1.example.com/cb", "http://h2.example.com/cb"]
+    assert s == [key_of(s, 2)] and t == [h0_key]
+
+    # a fleet past the old 32-config multiplex threshold and back down
+    # stays ONE query on ONE checkpoint (no mode flip, no replay)
+    set_hooks(1, 40)
+    s, t = rec.reconcile(store.snapshot())
+    assert len(s) == 37 and not t and len(queries[-1].rows) == 39
+    set_hooks(1, 3)
+    s, t = rec.reconcile(store.snapshot())
+    assert not s and len(t) == 37 and urls(queries[-1]) == urls(queries[1])
+    assert len(queries) == 4 and {q.checkpoint_dir for q in queries} == {ckpt}
+    assert [q for q in queries if not q.stopped] == [rec.query]
+
+    # a terminated query is healed on the next full tick, same checkpoint
+    rec.query.stopped = True
+    assert rec.reconcile(store.snapshot()) == ([], [])
+    assert len(queries) == 5 and rec.query is queries[4]
+    assert queries[4].checkpoint_dir == ckpt and urls(queries[4]) == urls(queries[1])
+
+    # empty desired set: the query stops, every key reported stopped
+    served = sorted(r["sub_key"] for r in rec.query.rows)
+    set_hooks(0, 0)
+    s, t = rec.reconcile(store.snapshot())
+    assert not s and sorted(t) == served
+    assert rec.query is None and queries[4].stopped and len(queries) == 5
+    assert rec.reconcile(store.snapshot()) == ([], []) and len(queries) == 5
 
 
-def test_mode_transition_redelivery_contract(spark, tmp_path):
-    """End-to-end pin of the documented mode-transition contract with
-    REAL StreamingQueries (reconciler docstring / SCALE.md): per-sub and
-    mux modes keep separate checkpoint families, so (a) flipping INTO
-    mux replays the retained backlog once per config, (b) the mux
-    checkpoint then delivers only new messages, and (c) flipping back
-    OUT resumes per-sub checkpoints frozen at flip-in, redelivering the
-    mux period — at-least-once throughout, nothing ever lost."""
+def test_reconciler_restarts_on_header_edit(spark, tmp_path):
+    """A config edit that keeps the URL (POST /v2/topic with new Headers,
+    here a different TopicFn reply target) must reach the running
+    delivery: the query holds a frozen config snapshot, so the reconciler
+    restarts it with the new headers on the same checkpoint. The sub_key
+    (key + url) is unchanged, so nothing is reported started or stopped."""
     from pulsar_beam_spark.model.config_store import ConfigStore
-    from pulsar_beam_spark.streaming.delivery import deliver_multiplexed_stream
-    from pulsar_beam_spark.streaming.reconciler import desired_deliveries
+    from pulsar_beam_spark.streaming.reconciler import Reconciler
 
-    topic = "persistent://tenant0/ns/flip"
-    src = str(tmp_path / "flip-src")
-    rows = [(f"m-{i}", topic, None, b"x", T0 + timedelta(minutes=i),
-             T0 + timedelta(minutes=i), {"PulsarBeamId": f"u-{i}"})
-            for i in range(6)]
-    spark.createDataFrame(rows, MESSAGE_SCHEMA).coalesce(1).write.parquet(src)
+    store = ConfigStore(spark, str(tmp_path / "cfg-hdr"))
+    queries = []
 
-    urls = [f"http://h{i}.example.com/cb" for i in range(5)]
+    def start_fn(rows, ckpt):
+        queries.append(FakeQuery(rows, ckpt))
+        return queries[-1]
 
-    def per_sub_ckpt(url):
-        return str(tmp_path / f"flip-ckpt-{url.split('/')[2].split('.')[0]}")
+    rec = Reconciler(spark, str(tmp_path / "ckpts-hdr"), start_fn)
 
-    def run_per_sub(url, spool):
-        t = _Transport([(200, {}, b"")], spool=spool)
-        q = deliver_stream(
-            spark.readStream.schema(MESSAGE_SCHEMA).parquet(src)
-            .filter(F.col("topic") == topic),
-            WebhookSink(url, transport=t), per_sub_ckpt(url),
-            query_name=f"flip-{url.split('/')[2]}",
-        )
-        q.processAllAvailable()
-        q.stop()
-        return t
-
-    # phase 1 — per-sub mode, 2 configs: each endpoint sees all 6
-    t1 = run_per_sub(urls[0], tmp_path / "sp1a")
-    t1b = run_per_sub(urls[1], tmp_path / "sp1b")
-    assert len(t1.calls) == 6 and len(t1b.calls) == 6
-
-    # phase 2 — fleet grows to 5, flip INTO mux (fresh shared checkpoint,
-    # exactly what Reconciler._checkpoint_for(_MUX_KEY) yields on first
-    # flip): the retained backlog replays once per config — the 2
-    # original endpoints re-receive all 6 (documented transition cost)
-    store = ConfigStore(spark, str(tmp_path / "flip-cfg"))
-    store.update(topic, "pulsar://c:6650",
-                 [Webhook(u, f"s{i}") for i, u in enumerate(urls)])
-    configs = desired_deliveries(store.snapshot())
-    mux_ckpt = str(tmp_path / "flip-ckpt-mux")
-    sp2 = tmp_path / "sp2"
-
-    def run_mux(spool):
-        t = _Transport([(200, {}, b"")], spool=spool)
-        q = deliver_multiplexed_stream(
-            spark.readStream.schema(MESSAGE_SCHEMA).parquet(src),
-            configs, mux_ckpt,
-            sink_factory=lambda cfg: WebhookSink(cfg["url"], transport=t),
-            query_name="flip-mux",
-        )
-        q.processAllAvailable()
-        q.stop()
-        return t
-
-    t2 = run_mux(sp2)
-    per_url = {}
-    for u, _, h in t2.calls:
-        per_url.setdefault(u, set()).add(h["PulsarBeamId"])
-    assert per_url == {u: {f"u-{i}" for i in range(6)} for u in urls}
-
-    # phase 3 — steady mux: 2 new messages, same checkpoint -> ONLY the
-    # new ones deliver (no repeat of the backlog)
-    rows2 = [(f"m-{i}", topic, None, b"x", T0 + timedelta(minutes=i),
-              T0 + timedelta(minutes=i), {"PulsarBeamId": f"u-{i}"})
-             for i in (6, 7)]
-    spark.createDataFrame(rows2, MESSAGE_SCHEMA).coalesce(1) \
-        .write.mode("append").parquet(src)
-    t3 = run_mux(tmp_path / "sp3")
-    got3 = {(u, h["PulsarBeamId"]) for u, _, h in t3.calls}
-    assert got3 == {(u, f"u-{i}") for u in urls for i in (6, 7)}
-
-    # phase 4 — flip back OUT: original per-sub checkpoints were frozen
-    # at flip-in, so they redeliver exactly the mux period (u-6, u-7)
-    t4 = run_per_sub(urls[0], tmp_path / "sp4")
-    assert {h["PulsarBeamId"] for _, _, h in t4.calls} == {"u-6", "u-7"}
-
-
-def test_reconciler_hysteresis_band_no_flapping(spark, tmp_path):
-    """A fleet oscillating around multiplex_threshold must not flip modes
-    every tick: each mode transition abandons one checkpoint family for
-    the other and redelivers the backlog (reconciler docstring), so the
-    mode only flips up ABOVE multiplex_threshold and down AT/BELOW
-    demux_threshold (default threshold // 2)."""
-    from pulsar_beam_spark.model.config_store import ConfigStore
-    from pulsar_beam_spark.streaming.reconciler import _MUX_KEY, Reconciler
-
-    store = ConfigStore(spark, str(tmp_path / "cfg-hyst"))
-
-    class FakeQuery:
-        def __init__(self):
-            self.stopped = False
-
-        def stop(self):
-            self.stopped = True
-
-    rec = Reconciler(spark, str(tmp_path / "ckpts-hyst"),
-                     lambda row, ckpt: FakeQuery(),
-                     start_mux_fn=lambda rows, ckpt: FakeQuery(),
-                     multiplex_threshold=4)  # default demux_threshold = 2
-
-    def set_hooks(n):
+    def set_reply(target):
         store.update("persistent://t/ns/a", "pulsar://c:6650",
-                     [Webhook(f"http://h{i}.example.com/cb", f"s{i}") for i in range(n)])
+                     [Webhook("http://fn.example.com/cb", "s", headers=[f"TopicFn: {target}"])])
 
-    # per-sub mode holds right up TO the threshold
-    set_hooks(4)
-    rec.reconcile(store.snapshot())
-    assert _MUX_KEY not in rec.running and len(rec.running) == 4
+    set_reply("persistent://t/ns/reply-a")
+    s, t = rec.reconcile(store.snapshot())
+    assert len(s) == 1 and not t and len(queries) == 1
 
-    set_hooks(5)  # above threshold: flip up
-    rec.reconcile(store.snapshot())
-    assert list(rec.running) == [_MUX_KEY]
-
-    # oscillate 5 -> 4 -> 5 -> 3: all inside (demux=2, mux=4] band -> stays mux
-    for n in (4, 5, 3):
-        set_hooks(n)
-        rec.reconcile(store.snapshot())
-        assert list(rec.running) == [_MUX_KEY], f"flapped at n={n}"
-
-    set_hooks(2)  # at demux_threshold: now flip down
-    rec.reconcile(store.snapshot())
-    assert _MUX_KEY not in rec.running and len(rec.running) == 2
+    set_reply("persistent://t/ns/reply-b")
+    assert rec.reconcile(store.snapshot()) == ([], [])
+    assert len(queries) == 2 and queries[0].stopped and rec.query is queries[1]
+    assert list(queries[1].rows[0]["headers"]) == ["TopicFn: persistent://t/ns/reply-b"]
+    assert queries[1].checkpoint_dir == queries[0].checkpoint_dir
 
 
 def test_sse_stream_order_and_at_most_once(spark, tmp_path):
@@ -1532,7 +1405,6 @@ def test_multiplexed_no_matching_config_appends_nothing(spark, tmp_path):
     anything NOR append an empty reply part file — the routed-frame gate,
     the join-side analogue of the source-side empty-epoch gate."""
     from pulsar_beam_spark.model.config_store import ConfigStore
-    from pulsar_beam_spark.streaming.delivery import deliver_multiplexed_stream
     from pulsar_beam_spark.streaming.reconciler import desired_deliveries
 
     store = ConfigStore(spark, str(tmp_path / "cfg-miss"))
@@ -1570,8 +1442,6 @@ def test_delivery_arrow_path_null_fields(spark, tmp_path):
     from datetime import datetime
 
     from pulsar_beam_spark.model.message import MESSAGE_SCHEMA
-    from pulsar_beam_spark.streaming.delivery import WebhookSink, deliver_stream
-
     t0 = datetime(2024, 1, 1)
     rows = [
         ("m-null", "persistent://t/ns/a", None, None, t0, t0, None),
@@ -1583,7 +1453,9 @@ def test_delivery_arrow_path_null_fields(spark, tmp_path):
     spool = tmp_path / "spool-null"
     t = _Transport([(200, {}, b"")], spool=spool)
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(src)
-    q = deliver_stream(stream, WebhookSink("http://stub", transport=t), str(tmp_path / "ckpt-null"))
+    sink = WebhookSink("http://stub", transport=t)
+    q = deliver_multiplexed_stream(stream, topic_routes(spark, ["persistent://t/ns/a"], sink.url),
+                                   str(tmp_path / "ckpt-null"), sink_factory=lambda cfg: sink)
     q.processAllAvailable()
     q.stop()
     by_id = {h["PulsarMessageId"]: (body, h) for _, body, h in t.calls}
@@ -1711,9 +1583,10 @@ def test_delivery_reply_write_partitions_compacts_files(spark, msg_dir, tmp_path
     )
     reply_dir = str(tmp_path / "reply-compact")
     stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(msg_dir)
-    q = deliver_stream(
-        stream, WebhookSink("http://stub", transport=t),
-        str(tmp_path / "ckpt-compact"),
+    sink = WebhookSink("http://stub", transport=t)
+    q = deliver_multiplexed_stream(
+        stream, topic_routes(spark, TOPICS, sink.url),
+        str(tmp_path / "ckpt-compact"), sink_factory=lambda cfg: sink,
         reply_table_dir=reply_dir, reply_write_partitions=1,
         query_name="compact-delivery",
     )
